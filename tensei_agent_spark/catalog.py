@@ -89,10 +89,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() use."""
     for name in TABLES:

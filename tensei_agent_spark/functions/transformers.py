@@ -458,18 +458,21 @@ def redact_pii(cols, email: bool = True, phone: bool = True):
     return out
 
 
-def sequential_id(df, order_cols: Sequence[str], start: int = 1, out_col: str = "seq_id"):
+def sequential_id(
+    df, order_cols: Sequence[Column | str], start: int = 1, out_col: str = "seq_id"
+):
     """transformers/IDTransformer.scala (type=long) — sequential id.
 
     The reference uses a central mutable counter actor
     (``generators/IDGenerator.scala:40-100``); a distributed engine
-    needs an explicit total order instead. Uses the scalable row-index
-    helper (no single-partition window).
+    needs an explicit total order instead. Numbers rows with the
+    distributed 1-based rank (no single-partition window).
     """
-    from ..operators.joins import with_row_index
+    from ..operators import named_col
+    from ..operators.windows import with_global_rank
 
-    out = with_row_index(df, order_cols, out_col)
-    return out.withColumn(out_col, F.col(out_col) + F.lit(start))
+    out = with_global_rank(df, order_cols, out_col)
+    return out.withColumn(out_col, named_col(out_col) + F.lit(start - 1))
 
 
 def drupal_vancode(df, id_col: str, article_col: str, parent_col: str, out_col: str = "vancode"):

@@ -16,3 +16,17 @@
 - ``maintenance`` compaction, Z-order layout, partition MERGE, manifests
 - ``multimodal``  binary-column plumbing (pluggable decode / features)
 """
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+
+def named_col(name: str) -> Column:
+    """The top-level column literally called *name*.
+
+    Target field names may contain dots (nested-JSON paths such as
+    ``name.first``); a bare ``F.col`` would parse those as struct-field
+    references and fail with ``UNRESOLVED_COLUMN``. Backtick-quoting
+    keeps the dots part of the name.
+    """
+    return F.col("`" + name.replace("`", "``") + "`")

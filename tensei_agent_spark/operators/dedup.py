@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import track
+from . import named_col
 
 logger = logging.getLogger(__name__)
 
@@ -48,7 +49,9 @@ def dedup_exact(
     order to make "first" deterministic. One hash shuffle on the unique
     cols; no global sort.
     """
-    w = Window.partitionBy(*unique_cols).orderBy(*[F.col(c) for c in keep_order])
+    w = Window.partitionBy(*[named_col(c) for c in unique_cols]).orderBy(
+        *[named_col(c) for c in keep_order]
+    )
     return (
         df.withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") == 1)
@@ -226,28 +229,6 @@ def char_shingles(
         F.expr(f"substring({text_col}, _pos, {k})").alias("shingle"),
     )
     return out.distinct() if distinct else out
-
-
-def shingle_sets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-) -> DataFrame:
-    """Per-document k-shingle SET as one array column — computed as a
-    pure map expression (``transform`` over a ``sequence`` +
-    ``array_distinct``), ZERO exchanges. The explode + groupBy
-    ``collect_set`` formulation shuffles every shingle occurrence
-    (|corpus text| rows) just to reassemble what each row already had;
-    measured 7.4s → 0.2s at sf0.1. Output: (id, _shs, n_sh)."""
-    arr = F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k})))"
-    )
-    return docs.select(F.col(id_col), arr.alias("_shs")).withColumn(
-        "n_sh", F.size("_shs")
-    )
 
 
 def ngram_jaccard_pairs(
@@ -1419,23 +1400,6 @@ def minhash_signatures_wide(
         sh.select(F.col(id_col), *perms)
         .groupBy(id_col)
         .agg(*[F.min(f"_h{i}").alias(f"sig{i}") for i in range(num_hashes)])
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    num_hashes: int = 16,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Long-form MinHash signatures (id, seed, minhash) — the wide
-    computation unpivoted (cheap: post-aggregation stack)."""
-    wide = minhash_signatures_wide(docs, text_col, id_col, k, num_hashes, hash_fn)
-    stack = ", ".join(f"{i}, sig{i}" for i in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack}) as (seed, minhash)"
     )
 
 

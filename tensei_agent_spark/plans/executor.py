@@ -36,7 +36,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import release_all
 from ..functions.transformers import apply_chain, sequential_id
+from ..operators import named_col
 from ..operators.joins import mapping_key_join, remap_foreign_keys, row_aligned_merge
 from .plan import CompiledPlan, compile_plan
 from .spec import Mapping, Pipeline, Recipe
@@ -93,21 +95,11 @@ def combine_sources(
         return out, {s: s for s in used}
 
     # Positional row alignment over each source's explicit total order.
-    out = None
+    sides = []
     for src in used:
         order = recipe.order_by.get(src) or [frames[src].columns[0]]
-        qdf = _qualified(frames[src], src)
-        qorder = [_qual(src, c) for c in order]
-        if out is None:
-            from ..operators.joins import with_row_index
-
-            out = with_row_index(qdf, qorder, "_rn")
-        else:
-            from ..operators.joins import with_row_index
-
-            rhs = with_row_index(qdf, qorder, "_rn")
-            out = out.join(rhs, "_rn", "inner")  # min(N,M) row cap
-    return out.drop("_rn"), {s: s for s in used}
+        sides.append((_qualified(frames[src], src), [_qual(src, c) for c in order]))
+    return row_aligned_merge(sides).drop("_rn"), {s: s for s in used}
 
 
 def mapping_columns(m: Mapping, resolver: dict[str, str]) -> list[Column]:
@@ -223,7 +215,13 @@ def run_pipeline(
     it counts rows PROCESSED by the recipe, upstream of the writer's
     unique-column dedup filter. Only populated when ``write=True``:
     observation results exist once an action runs.
+
+    Each run starts by releasing the tracked persists of earlier runs
+    (``cache.release_all``): Spark matches cached frames by logical
+    plan, so a re-run over a rewritten source file would otherwise
+    read the previous run's blocks.
     """
+    release_all()
     plan = (
         pipeline_or_plan
         if isinstance(pipeline_or_plan, CompiledPlan)
@@ -259,15 +257,9 @@ def run_pipeline(
         # at the end.
         declared = [f.name for f in target.fields if f.name in out.columns]
         if declared:
-            # Backtick-quote: target names may contain dots (nested
-            # JSON paths) and a bare string would parse as a struct
-            # field reference.
-            def _q(c: str) -> Column:
-                return F.col("`" + c.replace("`", "``") + "`")
-
             out = out.select(
-                *[_q(c) for c in declared],
-                *[_q(c) for c in out.columns if c not in declared],
+                *[named_col(c) for c in declared],
+                *[named_col(c) for c in out.columns if c not in declared],
             )
 
         # Parent-side: generate deterministic surrogate keys for
@@ -286,9 +278,12 @@ def run_pipeline(
         for af in auto_fields:
             natural = target.options.get("natural_key") or out.columns[0]
             start = int(target.options.get("auto_increment_start", 1))
-            keyed = sequential_id(out, [natural], start=start, out_col=af.name)
+            keyed = sequential_id(
+                out, [named_col(natural)], start=start, out_col=af.name
+            )
             key_maps[target.name] = keyed.select(
-                F.col(natural).alias("old_key"), F.col(af.name).alias("new_key")
+                named_col(natural).alias("old_key"),
+                named_col(af.name).alias("new_key"),
             )
             out = keyed
 
@@ -311,7 +306,7 @@ def run_pipeline(
                 obs = Observation(f"recipe_{recipe.name}")
                 null_cells = None
                 for c in out.columns:
-                    term = F.sum(F.col(c).isNull().cast("long"))
+                    term = F.sum(named_col(c).isNull().cast("long"))
                     null_cells = term if null_cells is None else null_cells + term
                 out = out.observe(
                     obs,

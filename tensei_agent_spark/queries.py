@@ -1118,11 +1118,14 @@ def filter_limit(spark: SparkSession, sf: str) -> DataFrame:
 def row_align(spark: SparkSession, sf: str) -> DataFrame:
     """Positional merge of two sources (reference RecipeWorker row loop,
     ``RecipeWorker.scala:332-394``): zip row i with row i, stop at the
-    shorter side. Distributed row indexing — see joins.with_row_index."""
+    shorter side. Distributed row numbering — see
+    joins.row_aligned_merge; ``rn`` is 0-based like the oracle's."""
     cust = load(spark, sf, "customer").select("c_custkey", "c_name")
     supp = load(spark, sf, "supplier").select("s_suppkey", "s_name")
-    out = J.row_aligned_merge(cust, supp, ["c_custkey"], ["s_suppkey"], "rn")
-    return out.select("rn", "c_custkey", "c_name", "s_suppkey", "s_name")
+    out = J.row_aligned_merge([(cust, ["c_custkey"]), (supp, ["s_suppkey"])], "rn")
+    return out.select(
+        (F.col("rn") - 1).alias("rn"), "c_custkey", "c_name", "s_suppkey", "s_name"
+    )
 
 
 @register(
@@ -1203,9 +1206,9 @@ def fk_remap(spark: SparkSession, sf: str) -> DataFrame:
     (old→new) map is joined against the child's FK column. Here the
     'generated' key is 1000 + write-order row number."""
     nation = load(spark, sf, "nation").select("n_nationkey")
-    km = J.with_row_index(nation, ["n_nationkey"], "rn").select(
+    km = with_global_rank(nation, ["n_nationkey"], "rn").select(
         F.col("n_nationkey").alias("old_key"),
-        (F.col("rn") + F.lit(1001)).alias("new_key"),
+        (F.col("rn") + F.lit(1000)).alias("new_key"),
     )
     child = load(spark, sf, "customer").select("c_custkey", "c_name", "c_nationkey")
     out = J.remap_foreign_keys(child, km, "c_nationkey")

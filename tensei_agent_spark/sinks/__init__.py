@@ -19,10 +19,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.spec import TargetSpec
+from ..operators import named_col
+from ..plans.spec import Field, TargetSpec
 
 WRITERS: dict[str, Callable[[DataFrame, TargetSpec], None]] = {}
 
@@ -35,66 +36,56 @@ def register(fmt: str):
     return deco
 
 
+def _target_column(f: Field, dtypes: dict[str, str]) -> Column:
+    """One declared target field as it is written.
+
+    A field no mapping produced is a typed NULL: the reference writes
+    None for unmapped elements (MappingModeAssociation.scala:526-756
+    leaves date_entered unmapped and the target table still has the
+    column). Then, ≙ ``processTargetData``
+    (``helpers/ProcessorHelpers.scala:124-212``): cast to the declared
+    type (a num source mapped onto a str target lands as its string
+    rendering, e.g. Drupal2WP status→comment_approved VARCHAR; a
+    declared decimal truncates precision), the default on NULL, the
+    ``format`` regex re-check (non-matching values null out) and the
+    max-length cut (dfasdl-utils processStringData,
+    processors/long-column-expected-target.csv).
+    """
+    base = named_col(f.name)
+    if f.name not in dtypes:
+        c = F.lit(None).cast(f.type)
+    elif f.type and dtypes[f.name] != f.type:
+        c = base.cast(f.type)
+    else:
+        c = base
+    if f.default is not None:
+        c = F.coalesce(c, F.lit(f.default).cast(f.type))
+    if f.format and f.type == "string":
+        c = F.when(c.rlike(f.format), c)
+    if f.max_length and f.type == "string":
+        c = F.substring(c, 1, int(f.max_length))
+    return c if c is base else c.alias(f.name)
+
+
 def prepare(df: DataFrame, spec: TargetSpec) -> DataFrame:
-    """Apply the shared write-side semantics (dedup / defaults / cap,
-    plus outgoing value formatting ≙ ``ProcessorHelpers.
-    processTargetData``, ``helpers/ProcessorHelpers.scala:148-212``:
-    numeric precision truncation via the declared decimal type, and
-    regex re-validation of ``format`` fields — non-matching values
-    null out, exactly like the reference's formatstr re-check)."""
-    out = df
-    # Declared target columns NO mapping produced still exist in the
-    # written row set, as typed NULLs placed at their tree position
-    # (the reference writes None for unmapped elements —
-    # MappingModeAssociation.scala:526-756 leaves date_entered
-    # unmapped and the target table still has the column). Defaults
-    # coalesce over them right below.
-    missing = [f for f in spec.fields if f.name not in out.columns]
-    if missing:
-        out = out.select(
-            "*",
-            *[F.lit(None).cast(f.type).alias(f.name) for f in missing],
-        )
-        declared = [f.name for f in spec.fields if f.name in out.columns]
-        out = out.select(
-            *declared, *[c for c in out.columns if c not in declared]
-        )
-    # Coerce each column to its declared target element type first —
-    # ≙ processTargetData, which converts every incoming value to the
-    # target element's type before the writer sees it (a num source
-    # mapped onto a str target lands as its string rendering, e.g.
-    # Drupal2WP status→comment_approved VARCHAR). No-op casts are
-    # eliminated by Catalyst's SimplifyCasts.
-    dtypes = dict(out.dtypes)
-    for f in spec.fields:
-        if f.type and f.name in dtypes and dtypes[f.name] != f.type:
-            out = out.withColumn(f.name, F.col(f.name).cast(f.type))
-    for f in spec.fields:
-        if f.default is not None and f.name in out.columns:
-            out = out.withColumn(
-                f.name, F.coalesce(F.col(f.name), F.lit(f.default).cast(f.type))
-            )
-    for f in spec.fields:
-        if f.name not in out.columns:
-            continue
-        if f.type.startswith("decimal"):
-            out = out.withColumn(f.name, F.col(f.name).cast(f.type))
-        if f.format and f.type == "string":
-            out = out.withColumn(
-                f.name,
-                F.when(
-                    F.col(f.name).rlike(f.format), F.col(f.name)
-                ),
-            )
-        if f.max_length and f.type == "string":
-            # dfasdl-utils processStringData cuts an overlong value to
-            # the target's max-length (ProcessorTest "should truncate
-            # the appropriate target fields",
-            # processors/long-column-expected-target.csv)
-            out = out.withColumn(
-                f.name, F.substring(F.col(f.name), 1, int(f.max_length))
-            )
-    unique_cols = [f.name for f in spec.fields if f.unique and f.name in out.columns]
+    """Apply the shared write-side semantics as one projection (see
+    :func:`_target_column`), then unique-column dedup and the row cap.
+
+    When a declared field is missing, the declared fields come first in
+    declaration order, followed by any undeclared columns.
+    """
+    dtypes = dict(df.dtypes)
+    fields = {f.name: f for f in spec.fields}
+    names = df.columns
+    if any(name not in dtypes for name in fields):
+        names = [*fields, *[c for c in df.columns if c not in fields]]
+    out = df.select(
+        *[
+            _target_column(fields[c], dtypes) if c in fields else named_col(c)
+            for c in names
+        ]
+    )
+    unique_cols = [f.name for f in spec.fields if f.unique]
     if unique_cols:
         from ..operators.dedup import dedup_exact
 

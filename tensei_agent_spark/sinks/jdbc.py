@@ -628,8 +628,29 @@ _BATCH = 1000  # ≙ the reference's batch/flush granularity
 DBAPI_MAX_ROWS = 1_000_000
 
 
+def _local_rows(df: DataFrame):
+    """Stream *df*'s rows to the driver, then complete its Observations.
+
+    ``toLocalIterator`` runs in a SQL execution without an action name,
+    so Spark's end-of-execution listener — the one that completes an
+    ``Observation`` — skips it, and ``Observation.get`` would wait
+    forever (``run_pipeline(metrics=...)`` on an embedded-Derby target).
+    Once every row is consumed the executed plan holds the final
+    observed metrics; they are handed to the session's observation
+    manager exactly as that listener would. No extra Spark job.
+    """
+    yield from df.toLocalIterator(prefetchPartitions=True)
+    manager = df.sparkSession._jsparkSession.observationManager()
+    # Scala-private, so reached by its JVM name (Spark 4.1 classic
+    # session); a renamed method fails here, loudly, not in a hang.
+    complete = getattr(
+        manager, "org$apache$spark$sql$classic$ObservationManager$$tryComplete"
+    )
+    complete(df._jdf.queryExecution())
+
+
 def _dbapi_rows(df: DataFrame):
-    for row in df.toLocalIterator(prefetchPartitions=True):
+    for row in _local_rows(df):
         yield tuple(row)
 
 
@@ -861,7 +882,7 @@ def jvm_write_rows(
             for i in range(len(cols))
         ]
         n = 0
-        for row in df.toLocalIterator(prefetchPartitions=True):
+        for row in _local_rows(df):
             for i, v in enumerate(row):
                 if v is None:
                     ps.setNull(i + 1, ptypes[i])

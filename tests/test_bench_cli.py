@@ -197,3 +197,37 @@ def test_bench_compare_flags_new_and_failed(tmp_path):
     proc = _run_compare(old, new)
     assert proc.returncode == 1, proc.stdout
     assert "NEW+FAILED" in proc.stdout
+
+
+def _run_bench_ab(*args):
+    return subprocess.run(
+        [sys.executable, "tools/bench_ab.py", *args],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+
+
+def test_bench_ab_rejects_nonexistent_tree(tmp_path):
+    """A twin pointed at a tree that does not exist stops the A/B
+    before any phase runs (no Spark), with a non-zero exit."""
+    proc = _run_bench_ab(str(tmp_path / "missing"), REPO, "q1_pricing_summary",
+                         "--reps", "1")
+    assert proc.returncode != 0
+    assert "missing" in proc.stderr
+    assert not proc.stdout.strip()
+
+
+def test_bench_ab_fails_loudly_when_a_twin_crashes(tmp_path):
+    """A twin that exits non-zero ends the A/B with its stderr and a
+    non-zero exit — never a partial JSON result. The fake tree's
+    package lacks the modules the twin imports, so it dies before
+    starting Spark."""
+    (tmp_path / "tensei_agent_spark").mkdir()
+    (tmp_path / "tensei_agent_spark" / "__init__.py").write_text("")
+    proc = _run_bench_ab(str(tmp_path), str(tmp_path), "q1_pricing_summary",
+                         "--reps=1")
+    assert proc.returncode != 0
+    assert "ModuleNotFoundError" in proc.stderr
+    assert '"queries"' not in proc.stdout

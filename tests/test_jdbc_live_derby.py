@@ -334,3 +334,50 @@ def test_overwrite_drop_failure_propagates(spark, derby_url):
         assert [int(r[0]) for r in rows] == [1]
     finally:
         jvm_execute(spark, derby_url, ['DROP VIEW "LIVE_VIEWED_V"'], DRIVER)
+
+
+def test_run_metrics_on_embedded_derby_target(spark, derby_url, tmp_path):
+    """`run_pipeline(metrics=...)` into embedded Derby returns the
+    recipe's accounting. The sink streams rows through the driver
+    (``toLocalIterator``), which Spark does not treat as a finished
+    action, so the Observation used to wait forever. Run under a
+    timeout so a regression fails instead of hanging the suite."""
+    import threading
+
+    from tensei_agent_spark.plans import (
+        ColumnRef, Mapping, Pipeline, Recipe, run_pipeline,
+    )
+
+    src = tmp_path / "people.csv"
+    src.write_text("1,ada\n2,\n2,alan\n3,grace\n")
+    p = Pipeline(
+        name="derby-metrics",
+        sources=(SourceSpec("people", "csv", str(src),
+                            (Field("id", "long"), Field("name"))),),
+        targets=(_spec(derby_url, "LIVE_METRICS", "append",
+                       (Field("id", "long", unique=True), Field("name", max_length=32))),),
+        recipes=(Recipe("r", "LIVE_METRICS", mappings=(
+            Mapping((ColumnRef("people", "id"), ColumnRef("people", "name")),
+                    ("id", "name")),
+        )),),
+    )
+    metrics: dict[str, dict] = {}
+    errors: list[Exception] = []
+
+    def run():
+        try:
+            run_pipeline(spark, p, metrics=metrics)
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "run_pipeline(metrics=...) did not return"
+    assert not errors, errors
+    # Counted upstream of the unique-column dedup: 4 rows, 1 NULL name.
+    assert metrics["r"] == {"rows_processed": 4, "null_cells": 1}
+    rows = jvm_query(
+        spark, derby_url, 'SELECT "id", "name" FROM "LIVE_METRICS"', DRIVER
+    )
+    assert sorted(int(r[0]) for r in rows) == [1, 2, 3]

@@ -491,3 +491,121 @@ def test_mapping_can_reference_lookup_source_key(spark, persons_path, salary_pat
     lines = open(out_path).read().splitlines()
     assert lines[0] == "1,1,2200.50"
     assert lines[3] == "4,,"  # miss: lookup key and amount both NULL
+
+
+def _nested_json_pipeline(persons_path, out_path, fields, mappings):
+    return Pipeline(
+        name="json-dotted",
+        sources=(SourceSpec("persons", "csv", persons_path, PERSON_FIELDS),),
+        targets=(
+            TargetSpec(
+                "out", "json", out_path, fields=fields,
+                options={"single_file": True, "order_by": ["id"]},
+            ),
+        ),
+        recipes=(Recipe("r", "out", mappings=tuple(mappings)),),
+    )
+
+
+def _names_mapping(targets):
+    return Mapping(
+        (ColumnRef("persons", "id"), ColumnRef("persons", "firstname"),
+         ColumnRef("persons", "lastname")),
+        targets,
+    )
+
+
+def test_nested_json_unique_dotted_field_dedups(spark, tmp_path):
+    """A unique dotted field on a nested-JSON target drops its repeats
+    (first row in order wins) instead of failing to resolve."""
+    src = tmp_path / "dup_persons.csv"
+    src.write_text(
+        "1,Albert,Einstein,1879-03-14\n"
+        "2,Marie,Curie,1867-11-07\n"
+        "3,Albert,Newton,1643-01-04\n"
+    )
+    out_path = str(tmp_path / "out.json")
+    p = _nested_json_pipeline(
+        str(src), out_path,
+        (Field("id", "long"), Field("name.first", unique=True), Field("name.last")),
+        [_names_mapping(("id", "name.first", "name.last"))],
+    )
+    run_pipeline(spark, p)
+    docs = json.loads(open(out_path).read())
+    assert docs == [
+        {"id": 1, "name": {"first": "Albert", "last": "Einstein"}},
+        {"id": 2, "name": {"first": "Marie", "last": "Curie"}},
+    ]
+
+
+def test_nested_json_dotted_field_cast_to_declared_type(spark, persons_path, tmp_path):
+    """A dotted field whose declared type differs from the mapped
+    column's is cast, like any other target field."""
+    out_path = str(tmp_path / "out.json")
+    p = _nested_json_pipeline(
+        persons_path, out_path,
+        (Field("id", "long"), Field("key.id", "string"), Field("name.last")),
+        [
+            Mapping((ColumnRef("persons", "id"),), ("id",)),
+            Mapping((ColumnRef("persons", "id"),), ("key.id",)),
+            Mapping((ColumnRef("persons", "lastname"),), ("name.last",)),
+        ],
+    )
+    run_pipeline(spark, p)
+    docs = json.loads(open(out_path).read())
+    assert docs[0] == {"id": 1, "key": {"id": "1"}, "name": {"last": "Einstein"}}
+    assert len(docs) == 3
+
+
+def test_run_metrics_on_nested_json_target(spark, persons_path, tmp_path):
+    """`metrics=` observes dotted target columns by their full name."""
+    out_path = str(tmp_path / "out.json")
+    p = _nested_json_pipeline(
+        persons_path, out_path,
+        (Field("id", "long"), Field("name.first"), Field("name.last")),
+        [_names_mapping(("id", "name.first", "name.last"))],
+    )
+    metrics: dict[str, dict] = {}
+    run_pipeline(spark, p, metrics=metrics)
+    assert metrics["r"] == {"rows_processed": 3, "null_cells": 0}
+
+
+def test_rerun_reads_rewritten_source(spark, tmp_path):
+    """Two runs in one session over the same source path: the second
+    must see the rewritten file, not the first run's persisted frames
+    (generated keys persist a range-partitioned copy of the source)."""
+    src = tmp_path / "people.csv"
+
+    def run(rows: str, name: str) -> list[str]:
+        src.write_text(rows)
+        out_path = str(tmp_path / name)
+        p = Pipeline(
+            name="rerun",
+            sources=(SourceSpec("people", "csv", str(src), PERSON_FIELDS),),
+            targets=(
+                TargetSpec(
+                    "out", "csv", out_path,
+                    fields=(Field("pk", "long", auto_increment=True),
+                            Field("id", "long"), Field("firstname")),
+                    options={"single_file": True, "order_by": ["id"],
+                             "natural_key": "id"},
+                ),
+            ),
+            recipes=(
+                Recipe("r", "out", mappings=(
+                    Mapping((ColumnRef("people", "id"),
+                             ColumnRef("people", "firstname")),
+                            ("id", "firstname")),
+                )),
+            ),
+        )
+        run_pipeline(spark, p)
+        return open(out_path).read().splitlines()
+
+    # The generated key is added after the mapped columns.
+    assert run(PERSONS_CSV, "first.csv") == [
+        "1,Albert,1", "2,Marie,2", "3,Isaac,3",
+    ]
+    assert run(PERSONS_CSV + "4,Ada,Lovelace,1815-12-10\n", "second.csv") == [
+        "1,Albert,1", "2,Marie,2", "3,Isaac,3", "4,Ada,4",
+    ]

@@ -5,11 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tensei_agent_spark.operators.joins import (
-    bucketed_table,
-    with_row_index,
-)
+from tensei_agent_spark.operators.joins import bucketed_table
 from tensei_agent_spark.operators.skew import salted_join
+from tensei_agent_spark.operators.windows import with_global_rank
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -56,13 +54,15 @@ def test_bucketed_join_has_no_shuffle(spark):
 
 
 def test_with_row_index_dense_and_ordered(spark):
+    """The distributed row index (with_global_rank, which replaced the
+    old joins.with_row_index) is dense and follows the requested order."""
     df = spark.range(0, 10_000).select(
         (F.lit(9_999) - F.col("id")).alias("key")  # descending input
     ).repartition(16)
-    out = with_row_index(df, ["key"], "rn").collect()
+    out = with_global_rank(df, ["key"], "rn").collect()
     pairs = sorted((r["rn"], r["key"]) for r in out)
-    # dense 0..N-1 index, aligned with the requested total order
-    assert [p[0] for p in pairs] == list(range(10_000))
+    # dense 1..N index, aligned with the requested total order
+    assert [p[0] for p in pairs] == list(range(1, 10_001))
     assert [p[1] for p in pairs] == list(range(10_000))
 
 
@@ -211,10 +211,8 @@ def test_row_aligned_merge_collect_is_exact_at_sf01(spark):
         pytest.skip("sf0.1 testdata not present")
     cust = cat_load(spark, sf, "customer").select("c_custkey", "c_name")
     supp = cat_load(spark, sf, "supplier").select("s_suppkey", "s_name")
-    out = row_aligned_merge(
-        cust, supp, ["c_custkey"], ["s_suppkey"], "rn"
-    )
+    out = row_aligned_merge([(cust, ["c_custkey"]), (supp, ["s_suppkey"])], "rn")
     rows = out.collect()  # the failing path was collect, NOT count
     assert len(rows) == 1000
     rns = sorted(r["rn"] for r in rows)
-    assert rns == list(range(1000)), "ranks must be dense and unique"
+    assert rns == list(range(1, 1001)), "ranks must be dense and unique"

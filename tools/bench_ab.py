@@ -8,7 +8,7 @@ between phases.
 
 Usage:
     python tools/bench_ab.py TREE_A TREE_B QUERY [QUERY ...]
-        [--reps N (default 3)]
+        [--reps N | --reps=N (default 3)]
 
 Per phase (tree × rep): a FRESH interpreter/session in that tree,
 sf0.001 warm of each query, then best-of-3 at $SPARK_GRAFT_SF_DIR with
@@ -21,10 +21,16 @@ is talking.
 TREE_A is typically a `git worktree add <dir> <prev-close-sha>` of the
 baseline; both trees must contain tensei_agent_spark + testdata paths
 resolve via the usual env contract.
+
+The last stdout line is one JSON object whose ``queries`` maps arm
+(``A``/``B``) → query → one best-of-3 per rep. The tool exits non-zero,
+printing the twin's stderr, if any phase fails or any arm ends with
+fewer than N samples for a query — never with partial data.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -65,32 +71,59 @@ def probe() -> str:
     return lines[-1] if lines else "{}"
 
 
-def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1]) if "=" in a else reps
-    if len(args) < 3:
-        sys.exit(__doc__)
-    tree_a, tree_b, queries = args[0], args[1], args[2:]
-    results: dict = {t: {q: [] for q in queries} for t in (tree_a, tree_b)}
+def run_twin(tree: str, queries: list[str]) -> dict[str, float]:
+    """One phase: a fresh interpreter in *tree*; best seconds per query.
+
+    Fails loudly: a twin that exits non-zero, or that reports fewer
+    queries than asked for, stops the whole A/B with its stderr.
+    """
+    out = subprocess.run(
+        [sys.executable, "-c", _TWIN, *queries],
+        cwd=tree, capture_output=True, text=True,
+    )
+    best = {}
+    for line in out.stdout.splitlines():
+        if line.startswith("RESULT "):
+            print(line, flush=True)
+            _, name, b, _ = line.split(None, 3)
+            best[name] = float(b.split("=")[1])
+    if out.returncode != 0 or set(best) != set(queries):
+        sys.stderr.write(out.stderr)
+        sys.exit(
+            f"bench_ab: twin in {tree} exited {out.returncode} with results "
+            f"for {sorted(best)} of {sorted(queries)}"
+        )
+    return best
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Same-weather interleaved A/B of bench queries."
+    )
+    parser.add_argument("tree_a")
+    parser.add_argument("tree_b")
+    parser.add_argument("queries", nargs="+")
+    parser.add_argument("--reps", type=int, default=3)
+    args = parser.parse_args(argv)
+    if args.reps < 1:
+        parser.error("--reps must be at least 1")
+    arms = {"A": args.tree_a, "B": args.tree_b}
+    for tree in arms.values():
+        if not os.path.isdir(os.path.join(tree, "tensei_agent_spark")):
+            parser.error(f"{tree}: not a tree containing tensei_agent_spark/")
+    # Keyed by arm, not path: an A/A run keeps two separate lists.
+    results = {arm: {q: [] for q in args.queries} for arm in arms}
     probes = []
-    for i in range(reps):
-        for tree in (tree_a, tree_b):
+    for i in range(args.reps):
+        for arm, tree in arms.items():
             p = probe()
             probes.append(p)
-            print(f"=== rep {i + 1} tree {tree}\n{p}", flush=True)
-            out = subprocess.run(
-                [sys.executable, "-c", _TWIN, *queries],
-                cwd=tree, capture_output=True, text=True,
-            )
-            for line in out.stdout.splitlines():
-                if line.startswith("RESULT "):
-                    print(line, flush=True)
-                    _, name, best, _ = line.split(None, 3)
-                    results[tree][name].append(float(best.split("=")[1]))
-    print(json.dumps({"queries": results, "steal_probes": probes}))
+            print(f"=== rep {i + 1} arm {arm} tree {tree}\n{p}", flush=True)
+            # run_twin returns every query or exits, so each arm ends
+            # with exactly --reps samples per query.
+            for name, best in run_twin(tree, args.queries).items():
+                results[arm][name].append(best)
+    print(json.dumps({"trees": arms, "queries": results, "steal_probes": probes}))
 
 
 if __name__ == "__main__":
